@@ -181,7 +181,7 @@ def bm25_topk(
     # (openCostInBytes floors split sizes; no-op at cluster scale). The
     # corpus-stats leg below deliberately stays on the UNSPREAD input:
     # avg(dl) is a float partial-sum whose order must not change.
-    from ..operators.dedup import spread
+    from ..operators.blocks import spread
 
     toks = spread(docs).select(
         F.col(id_col), dl, F.explode(tokens(F.lower(F.col(text_col)))).alias("term")

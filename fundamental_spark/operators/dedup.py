@@ -1,16 +1,16 @@
 """Deduplication operators for training-data pipelines.
 
-All are pure DataFrame plans (no Python in the hot path):
-
 - ``exact_dedup``: hash-groupBy on the normalized-text fingerprint.
-- ``ngram_jaccard_pairs``: exact word n-gram shingle Jaccard via
-  explode → self-join on shingle → |A∩B| / (|A|+|B|−|A∩B|). Quadratic
-  in *colliding* docs only; the shingle join is the classic inverted-
-  index trick, shuffles on shingle not on pair.
-- ``minhash_lsh``: k minhash signatures computed row-wise (array HOFs,
-  zero shuffle), banded into b bands of r rows; candidate pairs join on
-  (band, band_hash), then verified with exact Jaccard via per-pair
-  array_intersect — only candidates pay the pair cost.
+- ``ngram_jaccard_pairs``: exact word n-gram shingle Jaccard. Per-doc
+  60-bit shingle-hash arrays are grouped into blocks, and a numpy
+  postings-merge kernel counts |A∩B| for every doc pair of each block
+  pair (``blocks.blocked_pairs``, mapInPandas over Arrow batches) —
+  the inverted-index pair increments without a row per increment.
+- ``minhash_lsh``: k minhash signatures computed by a codegen'd
+  explode + groupBy(doc) min, banded into b bands of r rows;
+  candidate pairs join on (band, band_hash), then verified with exact
+  Jaccard via per-pair array_intersect — only candidates pay the pair
+  cost.
 - ``simhash``: 64-bit sign fingerprint from token-frequency-weighted
   bit votes; near-dup pairs found by the 4×16-bit block-pigeonhole
   join (hamming ≤ 3 ⇒ at least one equal block), verified by
@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint
+from .blocks import attach, blocked_pairs, fits_broadcast, spread
 
 MERSENNE61 = (1 << 61) - 1
 P31 = (1 << 31) - 1  # prime 2^31 - 1: a*h < 2^61 fits int64, wraps ~2^30 times
@@ -44,17 +45,6 @@ _A_SEED = 0x9E3779B97F4A7C15
 # for new work; it exists so the registered oracle SQL (which unrolls
 # the legacy arithmetic) stays bit-identical.
 _MIXINGS = ("wrap31", "affine61")
-
-
-def spread(df: DataFrame) -> DataFrame:
-    """Small-file inputs arrive in 1-2 scan partitions, so heavy
-    row-wise expressions (HOF lambdas are interpreted, not codegen'd)
-    run single-threaded. Spread to the session's parallelism; no-op at
-    scale, where scans already split into ≥cores partitions."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _mh_constants(k: int) -> list[tuple[int, int]]:
@@ -132,13 +122,6 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def _shingle_table(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    return docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
-    )
-
-
 def _shingle_hashes(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc, h): one row per distinct shingle with its 60-bit hash —
     the exploded hash table the signature agg, the verify aggs and the
@@ -165,66 +148,36 @@ def ngram_jaccard_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    plan: str = "blocked",
     block_rows: int = 2048,
-    broadcast_blocks: bool | None = None,
 ) -> DataFrame:
     """Exact shingle-Jaccard pairs ≥ threshold: (doc_a, doc_b, jaccard).
 
-    Two bit-identical physical plans (equality pinned by
-    tests/test_dedup.py::test_ngram_jaccard_plans_bit_identical):
-
-    - ``plan='index'``: the classic inverted-index self-join on the
-      shingle STRING + pair groupBy. Cost is Σ_sh df(sh)² join rows
-      shuffled and hash-aggregated by (doc_a, doc_b) — on a corpus
-      with a small shingle vocabulary (high df) this blows up: at
-      sf1.0 the 50k synthetic documents share only 27,865 distinct
-      shingles (mean df ≈ 94), so the join emits 257M rows into a
-      114M-group aggregation — measured 273.8 s on local[32].
-    - ``plan='blocked'`` (default, round 7): the same Σ_sh df² pair
-      increments, executed as vectorized numpy inside one mapInPandas
-      task per BLOCK PAIR (the jaccard twin of
-      similarity.embedding_near_dup_gemm). Docs hash into ~n/
-      ``block_rows`` blocks carrying per-doc sorted 60-bit shingle-hash
-      arrays; for each block pair the task merges the two postings
-      lists (argsort + intersect1d), expands the per-hash cross
-      products with cumsum tricks, and bincounts row-pair keys into
-      the dense intersection-count matrix — compiled-C throughput for
-      exactly the work the index join does row-at-a-time, with only
-      the (id, hashes) arrays ever shuffled (O(corpus), never O(df²)).
-      Measured at sf1.0: 273.8 s → ~8 s. Tasks emit the integer
-      triples (inter, na, nb) for survivors only; jaccard is divided
-      and rounded JVM-side from those exact integers, so the float
-      result is the same single IEEE-754 division the index plan (and
-      the DuckDB oracle) performs — bit-identical by construction.
-      Equality rests on the same negligible-md5-collision assumption
-      the whole signature pipeline documents (two distinct shingles of
-      one corpus colliding in 60 bits: ~C(27865,2)·2⁻⁶⁰ ≈ 3e-10).
-      Ids may be any orderable type; non-ASCII string ids would order
-      by Python/numpy unicode rather than Spark's binary collation
-      (all fixtures and tables here use ASCII or numeric ids).
+    The Σ_sh df(sh)² pair increments of the classic inverted-index
+    self-join, executed as vectorized numpy inside one task per BLOCK
+    PAIR (``blocks.blocked_pairs``; the jaccard twin of
+    similarity.embedding_near_dup_gemm). The index join shuffles and
+    hash-aggregates every increment as a row: at sf1.0 the 50k
+    synthetic documents share only 27,865 distinct shingles (mean df ≈
+    94), so it emits 257M rows into a 114M-group aggregation — measured
+    273.8 s on local[32] vs ~8 s for this plan. Docs hash into
+    ~n/``block_rows`` blocks carrying per-doc 60-bit shingle-hash
+    arrays; for each block pair the task merges the two postings lists
+    (argsort + intersect1d), expands the per-hash cross products with
+    cumsum tricks, and bincounts row-pair keys into the dense
+    intersection-count matrix, with only the (id, hashes) arrays ever
+    moved (O(corpus), never O(df²)). Tasks emit the integer triples
+    (inter, na, nb) for survivors only; jaccard is divided and rounded
+    JVM-side from those exact integers, so the float result is the
+    same single IEEE-754 division the index join and the DuckDB oracle
+    perform — equality with the index join is pinned by
+    tests/test_dedup.py::test_ngram_jaccard_plans_bit_identical.
+    Equality rests on the same negligible-md5-collision assumption the
+    whole signature pipeline documents (two distinct shingles of one
+    corpus colliding in 60 bits: ~C(27865,2)·2⁻⁶⁰ ≈ 3e-10). Ids may be
+    any orderable type; non-ASCII string ids would order by
+    Python/numpy unicode rather than Spark's binary collation (all
+    fixtures and tables here use ASCII or numeric ids).
     """
-    if plan == "index":
-        sh = _shingle_table(docs, id_col, text_col, n)
-        sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-            .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .agg(F.count("*").alias("inter"))
-        )
-        sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("na"))
-        sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb"))
-        jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-        return (
-            inter.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .filter(jac >= threshold)
-            .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        )
-    if plan != "blocked":
-        raise ValueError(f"unknown plan {plan!r}; one of ('blocked', 'index')")
     import math
 
     import numpy as np
@@ -232,7 +185,6 @@ def ngram_jaccard_pairs(
 
     sess = docs.sparkSession
     id_type = docs.schema[id_col].dataType.simpleString()
-    mid_schema = f"doc_a {id_type}, doc_b {id_type}, inter long, na long, nb long"
     n_docs = docs.count()
     if n_docs == 0:
         return sess.createDataFrame([], f"doc_a {id_type}, doc_b {id_type}, jaccard double")
@@ -265,42 +217,6 @@ def ngram_jaccard_pairs(
             F.flatten(F.transform("recs", lambda r: r["hs"])).alias("flat"),
         )
     )
-    pair_meta = sess.createDataFrame(
-        [(i, j) for i in range(nblocks) for j in range(i, nblocks)],
-        "blk_a int, blk_b int",
-    )
-    a_side = blocks.select(
-        F.col("blk").alias("blk_a"), F.col("ids").alias("ids_a"),
-        F.col("lens").alias("lens_a"), F.col("flat").alias("flat_a"),
-    )
-    b_side = blocks.select(
-        F.col("blk").alias("blk_b"), F.col("ids").alias("ids_b"),
-        F.col("lens").alias("lens_b"), F.col("flat").alias("flat_b"),
-    )
-    # Fan the TINY pair-meta out to the task count FIRST, then attach
-    # the block payloads by broadcast: the exchange carries two ints
-    # per task and each block's bytes move to the workers exactly once
-    # (guide §8 — decide with small rows, move big rows once). Letting
-    # the planner shuffle-join here instead ships every block once PER
-    # PAIR through the exchange: measured 521 MB shuffled and 25 s of
-    # fetch+deserialize at sf1.0 vs ~20 MB broadcast. The broadcast is
-    # gated on corpus size (hash arrays are O(corpus)); past the gate
-    # the plain join keeps the operator correct in its degraded mode —
-    # but an exact all-pairs jaccard at >1M docs is compute-infeasible
-    # anyway (Σ df² pair increments), and the banded/winnow paths are
-    # the scale plans.
-    ntasks = min(nblocks * (nblocks + 1) // 2, 4 * par)
-    if broadcast_blocks is None:
-        # HEURISTIC, not a measurement: assumes ~64 distinct shingles
-        # per doc (the corpus class here runs ~52). An F.broadcast hint
-        # bypasses autoBroadcastJoinThreshold, so a long-document
-        # corpus (thousands of shingles/doc) should pass
-        # broadcast_blocks=False explicitly and take the shuffle join
-        # rather than risk the 8 GB broadcast cap / driver memory.
-        broadcast_blocks = n_docs * 64 * 8 <= 512 * 1024 * 1024
-    if broadcast_blocks:
-        a_side, b_side = F.broadcast(a_side), F.broadcast(b_side)
-    tasks = pair_meta.repartition(ntasks).join(a_side, "blk_a").join(b_side, "blk_b")
 
     def _expand(starts, counts):
         """Concatenated [start, start+count) ranges, vectorized."""
@@ -313,68 +229,55 @@ def ngram_jaccard_pairs(
         out[ends[:-1]] = starts[1:] - (starts[:-1] + counts[:-1] - 1)
         return np.cumsum(out)
 
-    def _unpack(ids_cell, lens_cell, flat_cell):
-        ids = np.asarray(ids_cell)
-        lens = np.asarray(lens_cell, dtype=np.int64)
-        flat = np.asarray(flat_cell, dtype=np.int64)
+    def _unpack(blk):
+        ids = np.asarray(blk["ids"])
+        lens = np.asarray(blk["lens"], dtype=np.int64)
+        flat = np.asarray(blk["flat"], dtype=np.int64)
         rows = np.repeat(np.arange(len(ids), dtype=np.int64), lens)
         order = np.argsort(flat, kind="stable")
         return ids, lens, flat[order], rows[order]
 
-    def score(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ids_a, lens_a, sha, ra = _unpack(row.ids_a, row.lens_a, row.flat_a)
-                same = row.blk_a == row.blk_b
-                if same:
-                    ids_b, lens_b, shb, rb = ids_a, lens_a, sha, ra
-                else:
-                    ids_b, lens_b, shb, rb = _unpack(
-                        row.ids_b, row.lens_b, row.flat_b
-                    )
-                ua, ia, ca = np.unique(sha, return_index=True, return_counts=True)
-                ub, ib, cb = np.unique(shb, return_index=True, return_counts=True)
-                _, xa, xb = np.intersect1d(ua, ub, assume_unique=True, return_indices=True)
-                if not len(xa):
-                    continue
-                pa, pb = ca[xa], cb[xb]
-                # each a-entry of a common hash pairs with all b-entries
-                reps = np.repeat(pb, pa)
-                left = np.repeat(ra[_expand(ia[xa], pa)], reps)
-                right = rb[_expand(np.repeat(ib[xb], pa), reps)]
-                nb_rows = len(ids_b)
-                counts = np.bincount(
-                    left * nb_rows + right, minlength=len(ids_a) * nb_rows
-                ).reshape(len(ids_a), nb_rows)
-                na_m = lens_a[:, None]
-                nb_m = lens_b[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    jac = counts / (na_m + nb_m - counts)
-                mask = counts > 0
-                if same:
-                    mask &= ids_a[:, None] < ids_b[None, :]
-                mask &= jac >= threshold
-                ii, jj = np.nonzero(mask)
-                if not len(ii):
-                    continue
-                ia_ids, ib_ids = ids_a[ii], ids_b[jj]
-                if same:
-                    lo, hi = ia_ids, ib_ids
-                else:
-                    flip = ib_ids < ia_ids
-                    lo = np.where(flip, ib_ids, ia_ids)
-                    hi = np.where(flip, ia_ids, ib_ids)
-                yield pd.DataFrame(
-                    {
-                        "doc_a": lo,
-                        "doc_b": hi,
-                        "inter": counts[ii, jj],
-                        "na": lens_a[ii],
-                        "nb": lens_b[jj],
-                    }
-                )
+    def score(a, b):
+        ids_a, lens_a, sha, ra = _unpack(a)
+        same = b is None
+        ids_b, lens_b, shb, rb = (ids_a, lens_a, sha, ra) if same else _unpack(b)
+        ua, ia, ca = np.unique(sha, return_index=True, return_counts=True)
+        ub, ib, cb = np.unique(shb, return_index=True, return_counts=True)
+        _, xa, xb = np.intersect1d(ua, ub, assume_unique=True, return_indices=True)
+        if not len(xa):
+            return None
+        pa, pb = ca[xa], cb[xb]
+        # each a-entry of a common hash pairs with all b-entries
+        reps = np.repeat(pb, pa)
+        left = np.repeat(ra[_expand(ia[xa], pa)], reps)
+        right = rb[_expand(np.repeat(ib[xb], pa), reps)]
+        nb_rows = len(ids_b)
+        counts = np.bincount(
+            left * nb_rows + right, minlength=len(ids_a) * nb_rows
+        ).reshape(len(ids_a), nb_rows)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            jac = counts / (lens_a[:, None] + lens_b[None, :] - counts)
+        mask = counts > 0
+        if same:
+            mask &= ids_a[:, None] < ids_b[None, :]
+        mask &= jac >= threshold
+        ii, jj = np.nonzero(mask)
+        ia_ids, ib_ids = ids_a[ii], ids_b[jj]
+        flip = ib_ids < ia_ids
+        return pd.DataFrame(
+            {
+                "doc_a": np.where(flip, ib_ids, ia_ids),
+                "doc_b": np.where(flip, ia_ids, ib_ids),
+                "inter": counts[ii, jj],
+                "na": lens_a[ii],
+                "nb": lens_b[jj],
+            }
+        )
 
-    partial = tasks.mapInPandas(score, mid_schema)
+    partial = blocked_pairs(
+        blocks, nblocks, score,
+        f"doc_a {id_type}, doc_b {id_type}, inter long, na long, nb long",
+    )
     jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
     return partial.filter(jac >= threshold).select(
         "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
@@ -427,6 +330,20 @@ def minhash_signatures(
     )
 
 
+def _band_rows(sigs: DataFrame, r: int, bands: int, *keep: str) -> DataFrame:
+    """(doc, *keep, band_idx, band_hash): one row per (doc, band). The
+    band key is the r signature values verbatim (concat-joined), NOT a
+    hash of them: exact tuple equality has no collision-induced extra
+    candidates and is reproducible in DuckDB (full oracle)."""
+    band_cols = [
+        F.concat_ws("-", *[F.col(f"mh{band * r + j}") for j in range(r)])
+        for band in range(bands)
+    ]
+    return sigs.select(
+        "doc", *keep, F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash")
+    )
+
+
 def minhash_capture_prob(jaccard: float, k: int, bands: int) -> float:
     """P(a pair at this jaccard collides in ≥1 band) = 1-(1-j^r)^b."""
     r = k // bands
@@ -449,8 +366,9 @@ def plan_minhash_config(
     banding actually prunes. Returns the cheapest valid (k, b) by
     signature size, or None when none exists within max_k — at low
     thresholds (e.g. 0.1, where rows/band must be 1-2) at-threshold
-    recall costs hundreds of signature rows, and the exact
-    inverted-index join is the honest plan instead. Round-3 verdict
+    recall costs hundreds of signature rows, and the exact blocked
+    jaccard (``ngram_jaccard_pairs``) is the honest plan instead.
+    Round-3 verdict
     item: the previous fixed (64,16) default silently captured only
     ~half the pairs at jaccard 0.1."""
     import math
@@ -482,9 +400,10 @@ def minhash_near_dup_auto(
     similarity.embedding_near_dup_auto): derive a banded config whose
     at-threshold recall ≥ recall_target; when none exists within the
     signature budget — provably the case at low thresholds like 0.1 —
-    run the exact inverted-index join instead (full recall, full DuckDB
-    oracle). The decision is a function of the parameters, never the
-    data, so the chosen plan is deterministic per operating point."""
+    run the exact blocked jaccard (``ngram_jaccard_pairs``) instead
+    (full recall, full DuckDB oracle). The decision is a function of
+    the parameters, never the data, so the chosen plan is
+    deterministic per operating point."""
     cfg = plan_minhash_config(threshold, recall_target=recall_target)
     if cfg is None:
         return ngram_jaccard_pairs(
@@ -507,8 +426,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     verify_exact: bool = True,
     allow_low_recall: bool = False,
-    verify_plan: str = "auto",
-    join_verify_min: int | None = None,
     mixing: str = "wrap31",
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs. Candidates collide in ≥1 band of
@@ -522,24 +439,13 @@ def minhash_lsh_pairs(
     operating point) — a silently under-recalling config was round-3
     verdict item #3.
 
-    ``verify_plan``: 'array' verifies each candidate pair row-wise with
-    a long-array ``array_intersect`` (ships one compact hash array per
-    doc per pair; the HOF is interpreted but candidate-proportional);
-    'join' re-derives the intersection with the codegen explode-join
-    COUNT the DuckDB oracle uses (cinter CTE shape) — no interpreter
-    in the loop, but the candidate×shingle expansion (~300 rows/pair
-    at web-page shingle counts) crosses TWO extra exchanges. Measured
-    A/B at 41k / 0.4M / 3.6M candidate pairs (local[32], sf0.1-derived
-    corpora, bit-identical outputs): array 2.0/16.7/32.3 s vs join
-    3.3/27.2/54.4 s — the hypothesized dense-volume crossover does not
-    exist at realistic shingle counts, because the join's shuffle
-    volume grows with the same |candidates|×shingles/doc product that
-    the array plan pays only interpreter-cycles for. 'auto' therefore
-    resolves to 'array' unless the caller sets ``join_verify_min`` (a
-    measured-crossover escape hatch for corpora with very long shingle
-    arrays, where per-pair array rows outweigh exploded hash rows).
-    Both plans are bit-identical (shingles are distinct per doc, so
-    join-count == |∩|)."""
+    Verification intersects per-pair long hash arrays
+    (``_verify_candidate_pairs``). The codegen explode-join COUNT the
+    DuckDB oracle uses was measured slower at every tested volume
+    (41k / 0.4M / 3.6M candidates, local[32]: array 2.0/16.7/32.3 s vs
+    join 3.3/27.2/54.4 s, bit-identical) — its shuffle grows with the
+    same |candidates|×shingles/doc product the array plan pays only in
+    interpreter cycles."""
     if (k is None) != (bands is None):
         # deriving BOTH from the planner here would silently discard
         # the caller's explicit half (e.g. k=128 with bands unset would
@@ -594,20 +500,7 @@ def minhash_lsh_pairs(
     sigs = sigs.repartition(
         docs.sparkSession.sparkContext.defaultParallelism
     ).localCheckpoint(eager=True)
-    # band key = the r signature values verbatim (concat-joined), NOT a
-    # hash of them: exact tuple equality has no collision-induced extra
-    # candidates and is reproducible in DuckDB (full oracle)
-    band_cols = [
-        F.concat_ws("-", *[F.col(f"mh{band * r + j}") for j in range(r)]).alias(f"band{band}")
-        for band in range(bands)
-    ]
-    banded = sigs.select("doc", *band_cols)
-    stacked = banded.select(
-        "doc",
-        F.posexplode(F.array(*[F.col(f"band{i}") for i in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
-    )
+    stacked = _band_rows(sigs, r, bands)
     x = stacked.alias("x")
     y = stacked.alias("y")
     cands = (
@@ -622,49 +515,6 @@ def minhash_lsh_pairs(
     )
     if not verify_exact:
         return cands
-    if verify_plan not in ("auto", "array", "join"):
-        raise ValueError(f"unknown verify_plan {verify_plan!r}")
-    chosen = verify_plan
-    if chosen == "auto":
-        if join_verify_min is None:
-            # no measured crossover on this corpus class (see docstring
-            # A/B): array wins at every tested volume, and skipping the
-            # count also skips a cache + extra action
-            chosen = "array"
-        else:
-            # caller supplied a measured crossover: the count
-            # materializes candidate generation once (cached); the
-            # verify below reuses it, so the extra action costs only
-            # the count scan, not a second band join
-            cands = cands.cache()
-            chosen = "join" if cands.count() >= join_verify_min else "array"
-    if chosen == "join":
-        # codegen explode-join intersection count — the oracle's cinter
-        # CTE shape. Shingles are distinct per doc (word_shingles is
-        # array_distinct), so COUNT(*) of hash matches == |∩| exactly.
-        ex = _shingle_hashes(docs, id_col=id_col, text_col=text_col, n=n)
-        sizes = ex.groupBy("doc").agg(F.count("*").alias("n_sh"))
-        inter = (
-            cands.join(ex.select(F.col("doc").alias("doc_a"), "h"), "doc_a")
-            .join(ex.select(F.col("doc").alias("doc_b"), "h"), ["doc_b", "h"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("inter"))
-        )
-        scored_j = (
-            inter.join(
-                sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("na")),
-                "doc_a",
-            )
-            .join(
-                sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb")),
-                "doc_b",
-            )
-        )
-        jac_j = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-        return (
-            scored_j.filter(jac_j >= threshold)
-            .select("doc_a", "doc_b", F.round(jac_j, 4).alias("jaccard"))
-        )
     # Candidate-proportional verification: join each candidate pair to
     # the two docs' shingle-HASH arrays and verify row-wise with
     # array_intersect — cost ∝ |candidates| × shingles/doc, never
@@ -1131,19 +981,7 @@ def minhash_incremental_pairs(
         # whole signature pipeline per side (see minhash_lsh_pairs)
         .localCheckpoint(eager=True)
     )
-    band_cols = [
-        F.concat_ws("-", *[F.col(f"mh{band * r + j}") for j in range(r)]).alias(
-            f"band{band}"
-        )
-        for band in range(bands)
-    ]
-    stacked = sigs.select("doc", "is_new", *band_cols).select(
-        "doc",
-        "is_new",
-        F.posexplode(F.array(*[F.col(f"band{i}") for i in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
-    )
+    stacked = _band_rows(sigs, r, bands, "is_new")
     probe = stacked.filter(F.col("is_new")).select("doc", "band_idx", "band_hash")
     x = probe.alias("x")
     y = stacked.alias("y")
@@ -1172,37 +1010,34 @@ def _verify_candidate_pairs(
     n: int,
     id_col: str,
     text_col: str,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate (doc_a, doc_b) pairs:
     shingle arrays are built ONLY for docs appearing in a candidate
     (semi-join before the collect_list agg), so the verify cost is
     O(candidate docs), never O(corpus).
 
-    The pair frame is explicitly repartitioned between the (cheap)
-    hash joins and the (expensive, interpreted) per-pair
-    array_intersect: the joined bytes are small, so AQE's size-based
-    coalescing would otherwise run the whole intersect loop on 1-2
-    tasks (measured 8.5 s single-task at sf1.0, round 7); the
-    round-robin exchange costs ~the array bytes once and buys the full
-    session parallelism for the HOF evaluation.
+    The candidate frame is materialized ONCE (eager localCheckpoint —
+    pair rows only, small by construction): it is consumed twice below
+    (``involved`` prune + the verify join), and without the checkpoint
+    Spark re-executes the entire candidate-generation subtree per
+    consumer — column pruning gives each consumer a different canonical
+    plan, so exchange reuse cannot deduplicate them (measured: two
+    extra full corpus passes at sf1.0, round 7). The hash-array table
+    is materialized for the same reason: a_sh and b_sh are two
+    projections of it, and each join side would otherwise re-run the
+    semi-join + shingle + agg subtree.
 
-    With ``materialize=True`` (default — the corpus-scale registered
-    queries) the candidate frame is materialized ONCE (eager
-    localCheckpoint — pair rows only, small by construction): it is
-    consumed twice below (``involved`` prune + the verify join), and
-    without the checkpoint Spark re-executes the entire
-    candidate-generation subtree per consumer — column pruning gives
-    each consumer a different canonical plan, so exchange reuse cannot
-    deduplicate them (measured: two extra full corpus passes at
-    sf1.0, round 7). ``materialize=False`` keeps the whole verify
-    LAZY (no checkpoints, no broadcast hints, planner-chosen joins):
-    the right shape for per-wave/per-batch DELTA probes, where the
-    candidate subtree is delta-sized and cheap to recompute but every
-    eager checkpoint is a fixed driver round-trip per wave (measured:
-    the eager shape cost the crawl hook +1.5-4 s/wave at sf0.1)."""
-    if materialize:
-        cands = cands.localCheckpoint(eager=True)
+    When the arrays fit the measured broadcast gate, the PAIRS are
+    repartitioned before the joins (a projection placed after a
+    trailing repartition gets pushed below it, so the exchange must
+    come first) and the array sides broadcast, so the hash joins keep
+    the round-robin partitioning and the interpreted array_intersect
+    runs at full parallelism — the joined bytes are small, and AQE's
+    size-based coalescing would otherwise run the whole intersect loop
+    on 1-2 tasks (measured 8.5 s single-task at sf1.0, round 7). Past
+    the gate the join exchanges are large, so that collapse cannot
+    occur and sort-merge joins are the right plan."""
+    cands = cands.localCheckpoint(eager=True)
     involved = (
         cands.select(F.col("doc_a").alias("doc"))
         .unionByName(cands.select(F.col("doc_b").alias("doc")))
@@ -1211,58 +1046,24 @@ def _verify_candidate_pairs(
     docs_inv = docs.join(
         involved.withColumnRenamed("doc", id_col), id_col, "left_semi"
     )
-    hs_src = _shingle_hashes(docs_inv, id_col=id_col, text_col=text_col, n=n)
-    # materialized once: a_sh and b_sh below are two different
-    # projections of this table, and without the checkpoint each
-    # broadcast build re-runs the whole semi-join + shingle + agg
-    # subtree (measured as two full corpus passes at sf1.0)
-    hsz = hs_src.groupBy("doc").agg(
-        F.collect_list("h").alias("hs"), F.count("*").alias("n_sh")
+    hsz = (
+        _shingle_hashes(docs_inv, id_col=id_col, text_col=text_col, n=n)
+        .groupBy("doc")
+        .agg(F.collect_list("h").alias("hs"), F.count("*").alias("n_sh"))
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        hsz = hsz.localCheckpoint(eager=True)
+    broadcast = fits_broadcast(hsz)
+    if broadcast:
+        cands = cands.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     a_sh = hsz.select(
         F.col("doc").alias("doc_a"), F.col("hs").alias("sh_a"), F.col("n_sh").alias("na")
     )
     b_sh = hsz.select(
         F.col("doc").alias("doc_b"), F.col("hs").alias("sh_b"), F.col("n_sh").alias("nb")
     )
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    # Materialized path: repartition the PAIRS before the joins (a
-    # projection placed after a trailing repartition gets pushed below
-    # it, so the exchange must come first) and broadcast the array
-    # sides so the hash joins preserve the round-robin partitioning
-    # and the interpreted intersect runs at full parallelism. The
-    # broadcast is GATED on the ACTUAL array bytes (one cheap agg over
-    # the already-materialized hsz — an F.broadcast hint bypasses
-    # autoBroadcastJoinThreshold entirely, and a degenerate candidate
-    # set can pull most of the corpus into `involved`, where a forced
-    # multi-GB broadcast would hit the 8 GB hard cap or OOM the
-    # driver). Past the gate the planner-chosen join is the right
-    # plan anyway: at that volume the join exchanges are large, so
-    # AQE's small-bytes single-task collapse — the problem the
-    # broadcast shape exists to solve — cannot occur.
-    use_broadcast = False
-    if materialize:
-        tot = hsz.agg(F.sum("n_sh")).collect()[0][0] or 0
-        use_broadcast = tot * 8 <= 256 * 1024 * 1024
-    if not use_broadcast:
-        scored = cands.join(a_sh, "doc_a").join(b_sh, "doc_b").select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-            "na",
-            "nb",
-        )
-        jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-        return (
-            scored.filter(jac >= threshold)
-            .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        )
     scored = (
-        cands.repartition(par)
-        .join(F.broadcast(a_sh), "doc_a")
-        .join(F.broadcast(b_sh), "doc_b")
+        cands.join(attach(a_sh, broadcast), "doc_a")
+        .join(attach(b_sh, broadcast), "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -1304,22 +1105,10 @@ def minhash_band_table(
     explicitly; the table carries no marker, so the operator cannot
     detect the mismatch itself."""
     assert k % bands == 0
-    r = k // bands
     sigs = minhash_signatures(
         docs, k=k, n=n, id_col=id_col, text_col=text_col, mixing=mixing
     )
-    band_cols = [
-        F.concat_ws("-", *[F.col(f"mh{band * r + j}") for j in range(r)]).alias(
-            f"band{band}"
-        )
-        for band in range(bands)
-    ]
-    return sigs.select("doc", *band_cols).select(
-        "doc",
-        F.posexplode(F.array(*[F.col(f"band{i}") for i in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
-    )
+    return _band_rows(sigs, k // bands, bands)
 
 
 def minhash_probe_band_index(
@@ -1335,7 +1124,6 @@ def minhash_probe_band_index(
     text_col: str = "text",
     new_bands: DataFrame | None = None,
     mixing: str = "wrap31",
-    materialize: bool = True,
 ) -> DataFrame:
     """Probe a STORED band index with an ingest delta — the production
     sibling of ``minhash_incremental_pairs`` (which derives its index
@@ -1357,15 +1145,11 @@ def minhash_probe_band_index(
     completes it, and only that one (earlier docs sit in the index,
     same-ingest pairs canonicalize + distinct).
 
-    ``materialize`` (default True): materialize the candidate set and
-    verify arrays once (see _verify_candidate_pairs). Round-7 A/B on
-    the sf0.1 crawl hook (4.6M candidates by wave 7 under the fixed
-    wrap31 statistics): True ≈ 4.9 s/wave vs False ≈ 12 s/wave —
-    the lazy shape re-runs the index probe and the text-derivation
-    HOFs once per verify consumer, which dominates as soon as the
-    candidate volume is non-trivial. False remains for genuinely tiny
-    deltas where the extra eager driver round-trips are the larger
-    term."""
+    The candidate set and verify arrays are materialized once (see
+    _verify_candidate_pairs). Round-7 A/B on the sf0.1 crawl hook
+    (4.6M candidates by wave 7): materialized ≈ 4.9 s/wave vs lazy
+    ≈ 12 s/wave — the lazy shape re-runs the index probe and the
+    text-derivation HOFs once per verify consumer."""
     if not allow_low_recall:
         cap = minhash_capture_prob(threshold, k, bands)
         if cap < 0.9:
@@ -1401,8 +1185,7 @@ def minhash_probe_band_index(
         .distinct()
     )
     return _verify_candidate_pairs(
-        cands, texts, threshold=threshold, n=n, id_col=id_col,
-        text_col=text_col, materialize=materialize,
+        cands, texts, threshold=threshold, n=n, id_col=id_col, text_col=text_col
     )
 
 

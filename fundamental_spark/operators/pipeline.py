@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .blocks import spread
 from .dedup import _md5_hash60, word_kgrams, word_shingles
 
 # ---------------------------------------------------------------------------
@@ -88,8 +89,6 @@ def repetition_metrics(
     per-row-heavy kind that a 2-partition small-file scan serializes
     (openCostInBytes floors split sizes) — same rule as the other
     text operators, a no-op at cluster scale."""
-    from .dedup import spread
-
     docs = spread(docs)
     toks = docs.select(
         F.col(id_col).alias("doc"),
@@ -198,8 +197,6 @@ def contamination_check(
     once. Input spread (round 7): the 5-gram explode ran on the raw
     2-partition scan — 2-task 3.5 s-CPU stages at sf1.0; measured
     6.8 s → 1.4 s with the spread."""
-    from .dedup import spread
-
     docs = spread(docs)
     cand = docs.select(
         F.col(id_col).alias("doc"),
@@ -405,8 +402,6 @@ def line_occurrences(
     requested passthrough columns ever shuffle. Input spread (round
     7): the chunk/split explode is per-row-heavy; measured
     8.3 s → 4.0 s for line_dedup_stats at sf1.0 with the spread."""
-    from .dedup import spread
-
     docs = spread(docs)
     cols = [id_col, *extra_cols]
     if chunk_words is not None:
@@ -548,8 +543,6 @@ def lm_fluency(
     excluded (unscoreable, exactly as CCNet drops empty lines).
 
     Returns (doc_id, lang, n_bigrams, score_ppm)."""
-    from .dedup import spread
-
     base = spread(docs).select(
         F.col(id_col).alias("doc"), F.col("lang"), F.col(text_col).alias("t")
     )
@@ -713,8 +706,6 @@ def dsir_weights(
     Returns (doc_id, source, n_feats, logw_micro)."""
     import math
 
-    from .dedup import spread
-
     base = spread(docs).select(
         F.col(id_col).alias("doc"),
         F.col("source"),
@@ -807,8 +798,6 @@ def training_order(
     Returns (doc_id, global_pos, out_shard)."""
     import math
 
-    from .dedup import spread
-
     assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of 2"
     shift = 60 - int(math.log2(n_buckets))
     h = _md5_hash60(F.col(id_col).cast("string"))
@@ -877,8 +866,6 @@ def bpe_train(
     the per-round plan (explode -> partial-agg -> 1-row argmax) is the
     shape that scales. Sentinel bytes must not occur in the text (true
     for any printable corpus; they are stripped defensively)."""
-    from .dedup import spread
-
     enc0 = F.regexp_replace(
         F.regexp_replace(F.col("word"), f"[{_BPE_L}{_BPE_R}]", ""),
         "(.)",
@@ -978,8 +965,6 @@ def bpe_train_batched(
     symbol CREATED earlier in the same round (e.g. (t,h) then (th,e))
     — batching defers such dependent merges to the next round; counts
     of the pairs actually chosen are exact either way."""
-    from .dedup import spread
-
     if batch < 1:
         raise ValueError(f"batch must be >= 1, got {batch}")
     enc0 = F.regexp_replace(
@@ -1076,8 +1061,6 @@ def bpe_token_stats(
     encoding the corpus is a hash join of the word stream against the
     O(|vocab|) token-count table — the document text is never
     re-scanned symbol by symbol."""
-    from .dedup import spread
-
     _, vocab = bpe_train(
         docs, n_merges=n_merges, text_col=text_col, return_vocab=True
     )
@@ -1153,7 +1136,6 @@ def gopher_quality(
 
     Returns per-doc features + the conjunction ``keep``."""
     from ..functions.text import tokens
-    from .dedup import spread
 
     t = F.col(text_col)
     toks = tokens(t)
@@ -1289,8 +1271,6 @@ def quality_lr_fit(
     driver. Per-step weights are pinned to a 1e-9 grid in BOTH engines
     (the k-means/PQ trick) so float drift cannot compound across
     steps."""
-    from .dedup import spread
-
     # spread (round 7): the feature expressions (stopword fraction via
     # array HOFs, distinct-token fraction) are per-row-heavy and ran on
     # the raw 2-partition scan; every cross-row float this fit produces

@@ -10,7 +10,8 @@
   from fixed constants): bucket vectors by sign signature, search only
   same-bucket (multi-probe: hamming-1 buckets optional) — the scale
   path; recall measured against brute force in tests.
-- ``embedding_near_dup_pairs``: all pairs ≥ cosine threshold.
+- ``embedding_near_dup_gemm`` / ``embedding_near_dup_lsh_pairs``: all
+  pairs ≥ cosine threshold, exact (blocked GEMM) or banded LSH.
 """
 
 from __future__ import annotations
@@ -19,16 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def spread(df: DataFrame) -> DataFrame:
-    """Small-file inputs arrive in 1-2 scan partitions; heavy row-wise
-    vector expressions (HOF lambdas are interpreted) and cross joins
-    then run single-threaded. Spread to the session's parallelism;
-    no-op at scale where scans already split into ≥cores partitions."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+from .blocks import blocked_pairs, spread
 
 
 def _to_double(v: Column) -> Column:
@@ -308,6 +300,44 @@ def _nearest_cells_col(
     )
 
 
+def _pin9(x):
+    """Pin to the 1e-9 grid with half-away rounding — the F.round /
+    DuckDB ROUND(…, 9) rule the oracles mirror (np.round is half-EVEN
+    and would disagree exactly at grid boundaries). Applied to BLAS
+    dots before every compare, so an argmax or threshold test is
+    engine-independent despite pairwise vs sequential-fold summation
+    (~1e-15 apart)."""
+    import numpy as np
+
+    return np.sign(x) * np.floor(np.abs(x) * 1e9 + 0.5) / 1e9
+
+
+def _append_cols(df: DataFrame, vec_col: str, fields: list, fn) -> DataFrame:
+    """Append ``fields`` (StructFields) to every row of ``df``:
+    ``fn(mat)`` gets the Arrow batch's ``vec_col`` as a float64 matrix
+    and returns the new columns' values in ``fields`` order."""
+    import numpy as np
+    import pandas as pd
+
+    from pyspark.sql.types import StructType
+
+    schema = StructType(list(df.schema.fields) + fields)
+
+    def gen(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            if len(pdf) == 0:
+                for f in fields:
+                    pdf[f.name] = pd.Series([], dtype=object)
+            else:
+                mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+                for f, vals in zip(fields, fn(mat)):
+                    pdf[f.name] = vals
+            yield pdf
+
+    return df.mapInPandas(gen, schema)
+
+
 def assign_cells_gemm(
     df: DataFrame,
     cents_normed: list[list[float]],
@@ -332,30 +362,18 @@ def assign_cells_gemm(
     sequential-fold summation (~1e-15 apart); the DuckDB oracles
     mirror the pin with ROUND(list_dot_product(..), 9)."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+    from pyspark.sql.types import ArrayType, IntegerType, StructField
 
     C = np.array(cents_normed, dtype=np.float64)
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, ArrayType(IntegerType()))]
+
+    def top_cells(mat):
+        order = np.argsort(_pin9(mat @ C.T), axis=1, kind="stable")[:, ::-1][:, :n]
+        return [[row.astype("int32").tolist() for row in order]]
+
+    return _append_cols(
+        df, vec_col, [StructField(out_col, ArrayType(IntegerType()))], top_cells
     )
-
-    def gen(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf) == 0:
-                pdf[out_col] = pd.Series([], dtype=object)
-                yield pdf
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            s = mat @ C.T
-            s = np.sign(s) * np.floor(np.abs(s) * 1e9 + 0.5) / 1e9
-            order = np.argsort(s, axis=1, kind="stable")[:, ::-1][:, :n]
-            pdf[out_col] = [row.astype("int32").tolist() for row in order]
-            yield pdf
-
-    return df.mapInPandas(gen, schema)
 
 
 def assign_cells_coarse(
@@ -395,9 +413,8 @@ def assign_cells_coarse(
     import math as _math
 
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+    from pyspark.sql.types import ArrayType, IntegerType, StructField
 
     C = np.array(cents_normed, dtype=np.float64)
     k = len(C)
@@ -407,18 +424,15 @@ def assign_cells_coarse(
     # 3 Lloyd rounds, same pin + tie rules as the distributed form)
     reps = C[:g].copy()
     for _ in range(3):
-        s = C @ reps.T
-        s = np.sign(s) * np.floor(np.abs(s) * 1e9 + 0.5) / 1e9
+        s = _pin9(C @ reps.T)
         assign = np.argsort(s, axis=1, kind="stable")[:, ::-1][:, 0]
         for j in range(g):
             members = C[assign == j]
             if len(members):
-                m = members.mean(axis=0)
-                m = np.sign(m) * np.floor(np.abs(m) * 1e9 + 0.5) / 1e9
+                m = _pin9(members.mean(axis=0))
                 nrm = np.sqrt((m * m).sum()) or 1.0
                 reps[j] = m / nrm
-    s = C @ reps.T
-    s = np.sign(s) * np.floor(np.abs(s) * 1e9 + 0.5) / 1e9
+    s = _pin9(C @ reps.T)
     group_of = np.argsort(s, axis=1, kind="stable")[:, ::-1][:, 0]
     members_idx = [np.nonzero(group_of == j)[0] for j in range(g)]
     # round-6 advice #4: empty groups keep stale reps and could be
@@ -432,53 +446,42 @@ def assign_cells_coarse(
     members_idx = [members_idx[j] for j in nonempty]
     g = len(nonempty)
     p = min(n_probe_groups, g)
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, ArrayType(IntegerType()))]
-    )
 
-    def gen(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf) == 0:
-                pdf[out_col] = pd.Series([], dtype=object)
-                yield pdf
+    def top_cells(mat):
+        b = len(mat)
+        sg = _pin9(mat @ reps.T)
+        top_groups = np.argsort(sg, axis=1, kind="stable")[:, ::-1][:, :p]
+        # per candidate group: one GEMM over the rows probing it,
+        # merged into per-row (key, cell) pools — rows only ever
+        # score member centroids of their own top-p groups
+        pool_keys = np.full((b, 0), -np.inf)
+        pool_cells = np.full((b, 0), -1, dtype=np.int64)
+        for j in range(g):
+            rows = np.nonzero((top_groups == j).any(axis=1))[0]
+            mem = members_idx[j]
+            if not len(rows) or not len(mem):
                 continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            b = len(mat)
-            sg = mat @ reps.T
-            sg = np.sign(sg) * np.floor(np.abs(sg) * 1e9 + 0.5) / 1e9
-            top_groups = np.argsort(sg, axis=1, kind="stable")[:, ::-1][:, :p]
-            # per candidate group: one GEMM over the rows probing it,
-            # merged into per-row (key, cell) pools — rows only ever
-            # score member centroids of their own top-p groups
-            pool_keys = np.full((b, 0), -np.inf)
-            pool_cells = np.full((b, 0), -1, dtype=np.int64)
-            for j in range(g):
-                rows = np.nonzero((top_groups == j).any(axis=1))[0]
-                mem = members_idx[j]
-                if not len(rows) or not len(mem):
-                    continue
-                sj = mat[rows] @ C[mem].T
-                sj = np.sign(sj) * np.floor(np.abs(sj) * 1e9 + 0.5) / 1e9
-                w = sj.shape[1]
-                keys = np.full((b, w), -np.inf)
-                cells = np.full((b, w), -1, dtype=np.int64)
-                keys[rows] = sj
-                cells[rows] = mem
-                pool_keys = np.concatenate([pool_keys, keys], axis=1)
-                pool_cells = np.concatenate([pool_cells, cells], axis=1)
-            # top-n by (key DESC, cell DESC) from each row's pool
-            out = []
-            for i in range(b):
-                ki, ci = pool_keys[i], pool_cells[i]
-                valid = ci >= 0
-                ki, ci = ki[valid], ci[valid]
-                order = np.lexsort((ci, ki))[::-1][:n]
-                out.append(ci[order].astype("int32").tolist())
-            pdf[out_col] = out
-            yield pdf
+            sj = _pin9(mat[rows] @ C[mem].T)
+            w = sj.shape[1]
+            keys = np.full((b, w), -np.inf)
+            cells = np.full((b, w), -1, dtype=np.int64)
+            keys[rows] = sj
+            cells[rows] = mem
+            pool_keys = np.concatenate([pool_keys, keys], axis=1)
+            pool_cells = np.concatenate([pool_cells, cells], axis=1)
+        # top-n by (key DESC, cell DESC) from each row's pool
+        out = []
+        for i in range(b):
+            ki, ci = pool_keys[i], pool_cells[i]
+            valid = ci >= 0
+            ki, ci = ki[valid], ci[valid]
+            order = np.lexsort((ci, ki))[::-1][:n]
+            out.append(ci[order].astype("int32").tolist())
+        return [out]
 
-    return df.mapInPandas(gen, schema)
+    return _append_cols(
+        df, vec_col, [StructField(out_col, ArrayType(IntegerType()))], top_cells
+    )
 
 
 def kmeans_centroids(
@@ -604,9 +607,9 @@ def embedding_near_dup_lsh_pairs(
     r = n_planes/bands bits; candidate pairs collide in ≥1 band
     (P[caught] = 1-(1-p^r)^b with p = 1-θ/π), then exact-cosine
     verified. Shuffles on (band, value) — never materializes the cross
-    product; ``embedding_near_dup_pairs`` (all-pairs) is the exact
-    verifier/oracle, this operator is the one that scales. Recall vs
-    the exact pair set is measured in tests/test_similarity.py."""
+    product; ``embedding_near_dup_gemm`` is the exact plan, this
+    operator is the one that scales. Recall vs the exact pair set is
+    measured in tests/test_similarity.py."""
     assert n_planes % bands == 0
     r = n_planes // bands
     mask = (1 << r) - 1
@@ -723,12 +726,12 @@ def embedding_near_dup_auto(
     cfg = plan_near_dup_config(threshold, recall_target=recall_target)
     if cfg is None:
         # exact branch rides the DISTRIBUTED blocked-GEMM plan: same
-        # result set as embedding_near_dup_pairs (the pure-JVM oracle
-        # twin, kept registered separately), ~100× less per-pair
-        # overhead — numpy matmul per block pair instead of an
-        # interpreted HOF dot product per pair; no driver collect, any
-        # id type (round-5: the round-4 version collected the whole
-        # corpus matrix to the driver and hard-coded bigint ids)
+        # result set as the crossJoin HOF-cosine reference (tests),
+        # ~100× less per-pair overhead — numpy matmul per block pair
+        # instead of an interpreted HOF dot product per pair; no
+        # driver collect, any id type (round-5: the round-4 version
+        # collected the whole corpus matrix to the driver and
+        # hard-coded bigint ids)
         return embedding_near_dup_gemm(
             corpus, threshold=threshold, id_col=id_col, vec_col=vec_col
         )
@@ -755,9 +758,9 @@ def embedding_near_dup_gemm(
     — the fast exact plan (the near-dup twin of ``gemm_topk``).
 
     The corpus is hashed into ~n/``block_rows`` blocks, each folded to
-    one row holding its (id, vector) records; a driver-side metadata
-    table of the B(B+1)/2 block pairs equi-joins the block table twice,
-    and each task scores one block pair with a single float64 matmul,
+    one row holding its (id, vector) records; ``blocks.blocked_pairs``
+    runs one task per block pair (B(B+1)/2 of them), and each task
+    scores its block pair with a single float64 matmul,
     emitting only the id_a < id_b survivors at ≥ threshold. Nothing is
     ever collected to the driver (round-4 shipped a full-corpus
     ``collect()`` + broadcast here — the first thing to fall over at a
@@ -808,93 +811,32 @@ def embedding_near_dup_gemm(
             F.flatten(F.transform("recs", lambda r: r["v"])).alias("flat"),
         )
     )
-    # block-pair metadata (ints only — never data) built driver-side;
-    # each unordered row pair lands in exactly one (blk_a <= blk_b) task
-    pair_meta = sess.createDataFrame(
-        [(i, j) for i in range(nblocks) for j in range(i, nblocks)],
-        "blk_a int, blk_b int",
-    )
-    # Fan the TINY pair-meta out to the task count FIRST, then attach
-    # the block payloads by broadcast (guide §8 — decide with small
-    # rows, move big rows once): letting the planner shuffle-join here
-    # ships every block once PER PAIR through the exchange — measured
-    # at 500k×64 vectors the planner flips from broadcast to SMJ
-    # (blocks ~260 MB > the auto threshold) and the B≈123-block
-    # fan-out shuffles ~30 GB where the broadcast moves 260 MB once
-    # (147.6 s → ~60 s for the same threshold-0.995 run, round 7).
-    # The gate uses the ACTUAL n·dim·8 payload bytes (dim from one
-    # first() row); past ~512 MB the plain join is the degraded mode —
-    # and an exact all-pairs cosine at that n is n²-infeasible anyway
-    # (the LSH path is the scale plan). The repartition also prevents
-    # AQE coalescing the expanding GEMM onto 1-2 tasks (same respread
-    # rule as the band joins in dedup.py).
-    a_side = blocks.select(
-        F.col("blk").alias("blk_a"), F.col("ids").alias("ids_a"),
-        F.col("flat").alias("flat_a"),
-    )
-    b_side = blocks.select(
-        F.col("blk").alias("blk_b"), F.col("ids").alias("ids_b"),
-        F.col("flat").alias("flat_b"),
-    )
-    first = corpus.select(vec_col).first()
-    dim = len(first[0]) if first and first[0] is not None else 0
-    if n * max(dim, 1) * 8 <= 512 * 1024 * 1024:
-        a_side, b_side = F.broadcast(a_side), F.broadcast(b_side)
-    ntasks = min(nblocks * (nblocks + 1) // 2, 4 * par)
-    tasks = pair_meta.repartition(ntasks).join(a_side, "blk_a").join(b_side, "blk_b")
 
-    def _unpack(ids_cell, flat_cell):
-        ids = np.asarray(ids_cell)
-        mat = np.asarray(flat_cell, dtype=np.float64).reshape(len(ids), -1)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        return ids, mat
+    def _unpack(blk):
+        ids = np.asarray(blk["ids"])
+        mat = np.asarray(blk["flat"], dtype=np.float64).reshape(len(ids), -1)
+        return ids, mat / np.linalg.norm(mat, axis=1, keepdims=True)
 
-    def score(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ids_a, ma = _unpack(row.ids_a, row.flat_a)
-                if row.blk_a == row.blk_b:
-                    sims = ma @ ma.T
-                    # margin covers the JVM-side round(…,4): a raw cos
-                    # down to θ-5e-5 can still round up to ≥ θ
-                    ii, jj = np.nonzero(
-                        (sims >= threshold - 1e-4)
-                        & (ids_a[:, None] < ids_a[None, :])
-                    )
-                    lo, hi, cs = ids_a[ii], ids_a[jj], sims[ii, jj]
-                else:
-                    ids_b, mb = _unpack(row.ids_b, row.flat_b)
-                    sims = ma @ mb.T
-                    ii, jj = np.nonzero(sims >= threshold - 1e-4)
-                    ia, ib, cs = ids_a[ii], ids_b[jj], sims[ii, jj]
-                    flip = ib < ia
-                    lo = np.where(flip, ib, ia)
-                    hi = np.where(flip, ia, ib)
-                if len(lo):
-                    yield pd.DataFrame({"id_a": lo, "id_b": hi, "cos": cs})
+    def score(a, b):
+        ids_a, ma = _unpack(a)
+        ids_b, mb = (ids_a, ma) if b is None else _unpack(b)
+        sims = ma @ mb.T
+        # margin covers the JVM-side round(…,4): a raw cos down to
+        # θ-5e-5 can still round up to ≥ θ
+        hot = sims >= threshold - 1e-4
+        if b is None:
+            hot &= ids_a[:, None] < ids_b[None, :]
+        ii, jj = np.nonzero(hot)
+        ia, ib = ids_a[ii], ids_b[jj]
+        flip = ib < ia
+        return pd.DataFrame(
+            {"id_a": np.where(flip, ib, ia), "id_b": np.where(flip, ia, ib),
+             "cos": sims[ii, jj]}
+        )
 
-    partial = tasks.mapInPandas(score, out_schema)
+    partial = blocked_pairs(blocks, nblocks, score, out_schema)
     return partial.select(
         "id_a", "id_b", F.round("cos", 4).alias("cos")
-    ).filter(F.col("cos") >= threshold)
-
-
-def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All pairs with cosine ≥ threshold (embedding near-dup dedup).
-    O(n²) by construction — this is the exact verifier and the DuckDB
-    oracle twin; the fast exact plan is ``embedding_near_dup_gemm``,
-    the scale path ``embedding_near_dup_lsh_pairs``."""
-    a = spread(corpus).select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    cos = cosine(F.col("va"), F.col("vb"))
-    return pairs.select(
-        "id_a", "id_b", F.round(cos, 4).alias("cos")
     ).filter(F.col("cos") >= threshold)
 
 
@@ -968,13 +910,10 @@ def semdedup(
         sims = mat @ mat.T
         # dropped[j] ⇔ ∃ i<j with cos(i,j) ≥ θ; ids are sorted, so
         # "earlier id" is exactly the strict upper triangle. The cosine
-        # is pinned to the 1e-9 HALF-AWAY grid before the compare (the
-        # same form as assign_cells_gemm — np.round is half-EVEN and
-        # would disagree with the oracle's ROUND exactly at grid
-        # boundaries); BLAS pairwise summation and the oracle's
-        # sequential list_cosine_similarity fold differ by ~1e-15.
-        pinned = np.sign(sims) * np.floor(np.abs(sims) * 1e9 + 0.5) / 1e9
-        hot = pinned >= threshold
+        # is pinned to the 1e-9 HALF-AWAY grid before the compare
+        # (_pin9); BLAS pairwise summation and the oracle's sequential
+        # list_cosine_similarity fold differ by ~1e-15.
+        hot = _pin9(sims) >= threshold
         hot[np.tril_indices(len(pdf))] = False
         dropped = hot.any(axis=0)
         return pd.DataFrame(
@@ -1071,8 +1010,7 @@ def _pq_codes_np(mat, cs, c2s, dsub: int):
     out = []
     for s in range(len(cs)):
         key = -2.0 * (mat[:, s * dsub:(s + 1) * dsub] @ cs[s].T) + c2s[s]
-        key = np.sign(key) * np.floor(np.abs(key) * 1e9 + 0.5) / 1e9
-        out.append(np.argmin(key, axis=1))
+        out.append(np.argmin(_pin9(key), axis=1))
     return out
 
 
@@ -1155,33 +1093,18 @@ def assign_pq_codes_gemm(
     the interpreted JVM ``_unit_vec`` pass AND the 2× Arrow width of a
     float64 u column — safe because the 1e-16 normalization delta
     feeds only the pinned keys."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    from pyspark.sql.types import IntegerType, StructField
 
     m, dsub, cs, c2s = _pq_np_setup(codebooks)
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField(f"code_{s}", IntegerType()) for s in range(m)]
+
+    def codes(mat):
+        if normalize:
+            mat = _np_unit(mat)
+        return [c.astype("int32") for c in _pq_codes_np(mat, cs, c2s, dsub)]
+
+    return _append_cols(
+        df, u_col, [StructField(f"code_{s}", IntegerType()) for s in range(m)], codes
     )
-
-    def gen(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf) == 0:
-                for s in range(m):
-                    pdf[f"code_{s}"] = pd.Series([], dtype="int32")
-                yield pdf
-                continue
-            mat = np.array(pdf[u_col].tolist(), dtype=np.float64)
-            if normalize:
-                mat = _np_unit(mat)
-            for s, codes in enumerate(_pq_codes_np(mat, cs, c2s, dsub)):
-                pdf[f"code_{s}"] = codes.astype("int32")
-            yield pdf
-
-    return df.mapInPandas(gen, schema)
 
 
 def pq_codebooks(
@@ -1202,7 +1125,9 @@ def pq_codebooks(
     driver per iteration, independent of corpus size. Empty cells keep
     their previous centroid. 100 TB note: like FAISS, train on a
     bounded id-ordered sample (pass ``corpus.orderBy(id).limit(n)``) —
-    codebook quality saturates long before corpus size does."""
+    codebook quality saturates long before corpus size does. The seeds
+    (``orderBy(id).limit(ksub)``) are deterministic only because ``id``
+    is unique; duplicate ids would make the seed set plan-dependent."""
     first = corpus.select(vec_col).first()
     dim = len(first[0]) if first else 0
     if dim == 0 or dim % m:

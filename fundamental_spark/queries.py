@@ -975,9 +975,8 @@ def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     result set bit-for-bit (the GEMM twin has been hash-green against
     this very oracle shape via embedding_near_dup_auto since round 5;
     re-verified vs the oracle at sf0.001/0.01/0.1 this round). The
-    crossJoin form stays available as similarity.embedding_near_dup_pairs
-    (the O(n²)-by-construction reference verifier). Measured at sf1.0:
-    170.2 s → ~5 s (32 cores)."""
+    crossJoin form survives only as the test-side reference verifier.
+    Measured at sf1.0: 170.2 s → ~5 s (32 cores)."""
     from .operators.similarity import embedding_near_dup_gemm
 
     return embedding_near_dup_gemm(T(spark, sf_dir, "embeddings"), threshold=0.4)

@@ -17,6 +17,7 @@ from fundamental_spark.operators.dedup import (
     winnow_fingerprints,
     winnow_pairs,
 )
+from pair_references import embedding_near_dup_pairs, ngram_jaccard_index
 
 WORDS = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
@@ -60,35 +61,67 @@ def test_ngram_jaccard_finds_planted_pairs(planted):
     assert ("dup_a", "near_a") in pairs and pairs[("dup_a", "near_a")] > 0.8
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
 def test_ngram_jaccard_plans_bit_identical(planted):
-    """Round-7: the blocked numpy plan (postings merge + bincount per
-    block pair) must reproduce the inverted-index join bit-for-bit —
-    same pairs, same rounded jaccard — at several thresholds,
-    including sub-block corpora where one task sees everything."""
+    """The blocked numpy plan (postings merge + bincount per block
+    pair) must reproduce the inverted-index join bit-for-bit — same
+    pairs, same rounded jaccard — at several thresholds, including
+    sub-block corpora where one task sees everything."""
     for thr in (0.1, 0.5):
-        idx = sorted(
-            tuple(r)
-            for r in ngram_jaccard_pairs(planted, threshold=thr, plan="index").collect()
-        )
-        blk = sorted(
-            tuple(r)
-            for r in ngram_jaccard_pairs(planted, threshold=thr, plan="blocked").collect()
-        )
-        assert idx == blk and idx, thr
+        idx = _rows(ngram_jaccard_index(planted, threshold=thr))
+        assert idx == _rows(ngram_jaccard_pairs(planted, threshold=thr)) and idx, thr
     # tiny block size forces real cross-block pairs through the flip path
-    blk_small = sorted(
-        tuple(r)
-        for r in ngram_jaccard_pairs(
-            planted, threshold=0.1, plan="blocked", block_rows=8
-        ).collect()
+    assert _rows(ngram_jaccard_pairs(planted, threshold=0.1, block_rows=8)) == _rows(
+        ngram_jaccard_index(planted, threshold=0.1)
     )
-    idx_small = sorted(
-        tuple(r)
-        for r in ngram_jaccard_pairs(planted, threshold=0.1, plan="index").collect()
+
+
+def _executed_plan(df) -> str:
+    df.collect()  # AQE: the final plan exists only after execution
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pair_kernels_over_broadcast_limit(planted, spark, monkeypatch):
+    """The one measured broadcast gate, forced over the limit: the
+    blocked jaccard, the blocked GEMM and the MinHash verify take the
+    shuffle-join side (no BroadcastExchange over the block or array
+    table) and return exactly the rows of the broadcast run and of the
+    test-side references."""
+    from fundamental_spark.operators import blocks
+    from fundamental_spark.operators.similarity import embedding_near_dup_gemm
+
+    rng = random.Random(3)
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(200)],
+        "vec_id bigint, embedding array<float>",
     )
-    assert blk_small == idx_small
-    with pytest.raises(ValueError, match="unknown plan"):
-        ngram_jaccard_pairs(planted, plan="nope").collect()
+    runs = {
+        "jaccard": (
+            lambda: ngram_jaccard_pairs(planted, threshold=0.1, block_rows=8),
+            ngram_jaccard_index(planted, threshold=0.1),
+        ),
+        "gemm": (
+            lambda: embedding_near_dup_gemm(emb, 0.4, block_rows=16),
+            embedding_near_dup_pairs(emb, 0.4),
+        ),
+        "minhash": (
+            lambda: minhash_lsh_pairs(planted, threshold=0.3),
+            ngram_jaccard_index(planted, threshold=0.3),
+        ),
+    }
+    under = {}
+    for name, (run, _) in runs.items():
+        df = run()
+        assert "BroadcastExchange" in _executed_plan(df), name
+        under[name] = _rows(df)
+    monkeypatch.setattr(blocks, "BROADCAST_LIMIT_BYTES", 0)
+    for name, (run, ref) in runs.items():
+        df = run()
+        assert "BroadcastExchange" not in _executed_plan(df), name
+        assert _rows(df) == under[name] == _rows(ref) and under[name], name
 
 
 def test_minhash_lsh_recall_and_estimate(planted):
@@ -365,34 +398,14 @@ def test_word_kgrams_regex_equivalence(spark):
 
 
 def test_minhash_verify_plans_bit_identical(planted):
-    """Round-5 (r4 verdict #8): the codegen explode-join verify must
-    reproduce the long-array intersect verify bit-for-bit (shingles
-    are distinct per doc, so join-count == |intersection|), and the
-    auto switch must accept both regimes."""
-    runs = {
-        plan: sorted(
-            tuple(r)
-            for r in minhash_lsh_pairs(
-                planted, threshold=0.3, verify_plan=plan
-            ).collect()
-        )
-        for plan in ("array", "join", "auto")
-    }
-    assert runs["array"] == runs["join"] == runs["auto"]
-    assert runs["array"]  # planted near-dups present
-    # explicit crossover: auto + join_verify_min exercises the
-    # cached-count dispatch branch and must stay bit-identical
-    forced = sorted(
-        tuple(r)
-        for r in minhash_lsh_pairs(
-            planted, threshold=0.3, verify_plan="auto", join_verify_min=1
-        ).collect()
-    )
-    assert forced == runs["array"]
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        minhash_lsh_pairs(planted, threshold=0.3, verify_plan="nope").collect()
+    """Every verified MinHash-LSH row — pair and rounded jaccard — must
+    appear with the identical value in the exact index-join output:
+    the array-intersect verify is exact, only recall is banded."""
+    ref = {(a, b): j for a, b, j in _rows(ngram_jaccard_index(planted, threshold=0.3))}
+    got = _rows(minhash_lsh_pairs(planted, threshold=0.3))
+    assert got  # planted near-dups present
+    for a, b, j in got:
+        assert ref.get((a, b)) == j, (a, b, j)
 
 
 def test_dup_spans_planted(spark):

@@ -186,3 +186,50 @@ def test_fluency_modes_agree_without_boundary_ties(spark):
     a = sorted(tuple(r) for r in nt.collect())
     b = sorted(tuple(r) for r in qt.collect())
     assert a == b
+
+
+def _tree(plan: str) -> list[tuple[int, str]]:
+    """(column, node text) per line of a plan tree string."""
+    nodes = []
+    for line in plan.splitlines():
+        body = line.lstrip(" :+-")
+        if body:
+            nodes.append((len(line) - len(body), body))
+    return nodes
+
+
+def _subtree(nodes: list[tuple[int, str]], i: int) -> list[str]:
+    col = nodes[i][0]
+    out = []
+    for c, body in nodes[i + 1:]:
+        if c <= col:
+            break
+        out.append(body)
+    return out
+
+
+def test_blocked_pairs_fanout_shape(spark):
+    """The exact pair kernels share one fan-out shape (the shape of
+    plans/r07/*_after.txt): the pair-meta table crosses a round-robin
+    exchange, both block sides attach by BroadcastHashJoin, and
+    MapInPandas runs on top. The block table is built ONCE: no shingle
+    Generate and no collect_list ObjectHashAggregate under either
+    BroadcastExchange (each side reads the materialized table)."""
+    for name in ("dedup_ngram_jaccard", "embedding_near_dup"):
+        nodes = _tree(_plan(spark, name))
+        heads = [body.split()[0] for _, body in nodes]
+        top = heads.index("MapInPandas")
+        above_map = set(_subtree(nodes, top))
+        joins = [i for i, h in enumerate(heads) if h == "BroadcastHashJoin"]
+        assert len(joins) == 2 and all(nodes[i][1] in above_map for i in joins), name
+        fanout = [
+            i for i, (_, body) in enumerate(nodes)
+            if body.startswith("Exchange RoundRobinPartitioning")
+        ]
+        assert len(fanout) == 1 and fanout[0] > max(joins), name
+        assert not any("BroadcastExchange" in b for b in _subtree(nodes, fanout[0])), name
+        bx = [i for i, h in enumerate(heads) if h == "BroadcastExchange"]
+        assert len(bx) == 2, name
+        for i in bx:
+            sub = " ".join(_subtree(nodes, i))
+            assert "Generate" not in sub and "ObjectHashAggregate" not in sub, name

@@ -12,9 +12,9 @@ from fundamental_spark.operators.similarity import (
     brute_force_topk,
     cosine,
     embedding_near_dup_lsh_pairs,
-    embedding_near_dup_pairs,
     lsh_topk,
 )
+from pair_references import embedding_near_dup_pairs
 
 
 @pytest.fixture(scope="module")
@@ -220,7 +220,6 @@ def test_embedding_near_dup_gemm_equals_jvm_exact(spark):
     from fundamental_spark.operators.similarity import (
         embedding_near_dup_auto,
         embedding_near_dup_gemm,
-        embedding_near_dup_pairs,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -236,10 +235,7 @@ def test_gemm_blocked_multi_block_and_string_ids(spark):
     — force MANY small blocks and verify bit-parity with the JVM exact
     plan, and that non-integral ids keep their type (the round-4
     version hard-coded bigint and collected the corpus)."""
-    from fundamental_spark.operators.similarity import (
-        embedding_near_dup_gemm,
-        embedding_near_dup_pairs,
-    )
+    from fundamental_spark.operators.similarity import embedding_near_dup_gemm
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     jvm = sorted(tuple(r) for r in embedding_near_dup_pairs(emb, 0.4).collect())
